@@ -1,7 +1,6 @@
 """Run one workload of the traffic benchmark and print its result.
 
     python3 trafficbench/run.py --workload e1_train --seed 1 --seconds 10 --trace 0
-    python3 trafficbench/run.py --selftest
 
 Run from the root of a checkout. The launcher builds the library and the
 benchmark (build.py), sizes the JVM from this host (heap from MemTotal,
@@ -22,7 +21,7 @@ sys.dont_write_bytecode = True
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import build  # noqa: E402
 
-WORKLOADS = ("e1_train", "geo_build", "api_serve", "ingest_weather")
+WORKLOADS = ("e1_train", "api_serve", "ingest_weather")
 JVM_TIMEOUT_S = 170
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -63,14 +62,11 @@ def steal_pct(cpu0, cpu1):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", choices=WORKLOADS)
+    ap.add_argument("--workload", choices=WORKLOADS, required=True)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--selftest", action="store_true")
     a = ap.parse_args()
-    if not a.selftest and a.workload is None:
-        ap.error("--workload is required")
     root = os.getcwd()
     try:
         classpath = build.ensure_built(root)
@@ -90,12 +86,9 @@ def main():
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
     cmd += ["-cp", ":".join(classpath), "trafficbench.Main",
             "--cores", str(cores()), "--work", work,
-            "--data", os.path.join(bench, ".data")]
-    if a.selftest:
-        cmd += ["--selftest"]
-    else:
-        cmd += ["--workload", a.workload, "--seed", str(a.seed),
-                "--seconds", str(a.seconds), "--trace", str(a.trace)]
+            "--data", os.path.join(bench, ".data"),
+            "--workload", a.workload, "--seed", str(a.seed),
+            "--seconds", str(a.seconds), "--trace", str(a.trace)]
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True)
     result = None
     try:
@@ -121,12 +114,11 @@ def main():
         print(f"trafficbench: run failed (JVM exit code {proc.returncode})", file=sys.stderr)
         return proc.returncode or 1
     load1, cpu1 = machine_state()
-    if not a.selftest:
-        detail = result.pop("detail")
-        detail["machine"] = {"load1_start": load0, "load1_end": load1,
-                             "steal_pct": steal_pct(cpu0, cpu1),
-                             "cores": cores(), "heap_mb": heap_mb()}
-        print("DETAIL " + json.dumps(detail, sort_keys=True))
+    detail = result.pop("detail")
+    detail["machine"] = {"load1_start": load0, "load1_end": load1,
+                         "steal_pct": steal_pct(cpu0, cpu1),
+                         "cores": cores(), "heap_mb": heap_mb()}
+    print("DETAIL " + json.dumps(detail, sort_keys=True))
     print(json.dumps(result))
     return 0
 

@@ -10,20 +10,21 @@ import org.apache.spark.sql.SparkSession
 
 /** Entry point of the traffic benchmark: one workload per JVM.
   *
-  * A run generates its inputs from the seed (written once per seed under
-  * the data directory), sets up `SetupPasses` times and reports the median
-  * as `setup_s`, runs untimed warm-up rounds, then runs whole rounds of
-  * the workload's operations until `--seconds` have passed. Untraced runs
-  * print the end-to-end metrics; traced runs (`--trace 1`) register
-  * [[Tracer]]'s listeners and print the per-layer metrics instead.
+  * A run self-tests the checkers, generates its inputs from the seed
+  * (written once per seed under the data directory), then sets up: a
+  * Spark session, the workload's fits and builds, and its warm-up rounds.
+  * `setup_s` is the process CPU time from JVM start to the first timed
+  * operation, less that of the self-test and the input generation, which
+  * are the benchmark's own work; the wall-clock parts are on the detail
+  * line. Then it runs whole rounds of the workload's operations until
+  * `--seconds` have passed. Untraced runs print the end-to-end metrics;
+  * traced runs (`--trace 1`) register [[Tracer]]'s listeners and print the
+  * per-layer metrics instead.
   */
 object Main {
 
-  val SetupPasses = 3
-
   final case class Opts(workload: String = "", seed: Long = 1, seconds: Int = 10,
-      trace: Boolean = false, cores: Int = 4, work: String = "", data: String = "",
-      selftest: Boolean = false)
+      trace: Boolean = false, cores: Int = 4, work: String = "", data: String = "")
 
   def parse(args: List[String], o: Opts = Opts()): Opts = args match {
     case "--workload" :: v :: t => parse(t, o.copy(workload = v))
@@ -33,7 +34,6 @@ object Main {
     case "--cores" :: v :: t => parse(t, o.copy(cores = v.toInt))
     case "--work" :: v :: t => parse(t, o.copy(work = v))
     case "--data" :: v :: t => parse(t, o.copy(data = v))
-    case "--selftest" :: t => parse(t, o.copy(selftest = true))
     case Nil => o
     case other => throw new IllegalArgumentException(s"unknown arguments: $other")
   }
@@ -53,43 +53,36 @@ object Main {
   def main(args: Array[String]): Unit = {
     val jvmToMainS = (System.currentTimeMillis() - ManagementFactory.getRuntimeMXBean.getStartTime) / 1000.0
     val o = parse(args.toList)
-    val selfTest = SelfTest.run()
-    if (o.selftest) {
-      selfTest.foreach { case (name, ok) => println(s"selftest $name ${if (ok) "ok" else "FAILED"}") }
-      println("RESULT " + Json.write(Map("correct" -> selfTest.forall(_._2),
-        "attempted" -> selfTest.size, "failed" -> selfTest.count(!_._2))))
-      return
-    }
     val wl: Workload = o.workload match {
       case "e1_train" => new E1Train(o)
-      case "geo_build" => new GeoBuild(o)
       case "api_serve" => new ApiServe(o)
       case "ingest_weather" => new IngestWeather(o)
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
-    val tPrep = System.nanoTime()
+    val (tOwn, cpuOwn) = (System.nanoTime(), Cpu.processMs())
+    val selfTest = SelfTest.run()
     wl.prepare()
-    log(f"prepared inputs in ${(System.nanoTime() - tPrep) / 1e9}%.1f s")
+    val ownS = (System.nanoTime() - tOwn) / 1e9
+    val ownCpuS = (Cpu.processMs() - cpuOwn) / 1000
+    log(f"self-test and inputs in $ownS%.1f s")
 
     val tracer = if (o.trace) Some(new Tracer) else None
-    var spark: SparkSession = null
-    // The first pass also pays JVM start-up; input generation is excluded.
-    val setupS = (1 to SetupPasses).map { pass =>
-      val t0 = System.nanoTime()
-      if (spark != null) { wl.teardown(); spark.stop() }
-      spark = session(o)
-      spark.sparkContext.setLogLevel("ERROR")
-      tracer.foreach(_.attach(spark))
-      wl.setup(spark, tracer)
-      (System.nanoTime() - t0) / 1e9 + (if (pass == 1) jvmToMainS else 0.0)
-    }
-
-    log(s"set-up passes ${setupS.map(s => f"$s%.2f").mkString(", ")} s")
+    val tSession = System.nanoTime()
+    val spark = session(o)
+    spark.sparkContext.setLogLevel("ERROR")
+    tracer.foreach(_.attach(spark))
+    val tSetup = System.nanoTime()
+    wl.setup(spark, tracer)
     val tWarm = System.nanoTime()
     val warm = new Stats
     wl.warmUp(spark, warm, tracer)
-    log(f"warm-up round ${(System.nanoTime() - tWarm) / 1e9}%.1f s: " +
-      warm.samples.map { case (k, v) => f"$k ${v.sum / 1000}%.1f s" }.mkString(", "))
+    val tFirstOp = System.nanoTime()
+    val setupS = Cpu.processMs() / 1000 - ownCpuS
+    val setupParts = Map("cpu_s" -> setupS, "wall_s" -> (jvmToMainS + (tFirstOp - tSession) / 1e9),
+      "jvm_to_main_wall_s" -> jvmToMainS, "session_wall_s" -> (tSetup - tSession) / 1e9,
+      "fits_and_builds_wall_s" -> (tWarm - tSetup) / 1e9, "warm_up_wall_s" -> (tFirstOp - tWarm) / 1e9,
+      "excluded_selftest_and_inputs_wall_s" -> ownS, "excluded_selftest_and_inputs_cpu_s" -> ownCpuS)
+    log(f"set-up: " + setupParts.map { case (k, v) => f"$k $v%.2f" }.mkString(", "))
     val stats = new Stats
     tracer.foreach(_.startMeasure(spark))
     val gc0 = gcSeconds()
@@ -99,25 +92,27 @@ object Main {
     val measuredS = (System.nanoTime() - t0) / 1e9
     val gcS = gcSeconds() - gc0
     val peakHeapMb = Heap.peakMb()
-    wl.teardown()
     tracer.foreach(_.finish(spark))
+    wl.finalChecks(spark, stats)
+    wl.teardown()
     spark.stop()
 
-    val unknownFailures = stats.checks.exists { case (n, c) => c.fail > 0 && !wl.knownFaults(n) }
+    val unknownFailures = Seq(warm, stats).exists(_.checks.exists { case (n, c) => c.fail > 0 && !wl.knownFaults(n) })
     val correct = selfTest.forall(_._2) && !unknownFailures
-    val e2e = wl.endToEnd(stats) :+ ("setup_s" -> (median(setupS), "s"))
+    val e2e = wl.endToEnd(stats) :+ ("setup_s" -> (setupS, "s"))
     val metrics = tracer match {
       case None => e2e
       case Some(t) =>
-        Layers.all(t, stats, wl.tracedCounts(stats), wl.ownLayers) ++ Seq(
+        Layers.all(t, stats, wl.tracedCounts(stats)) ++ Seq(
           "jvm.gc_s" -> (gcS, "s"), "jvm.peak_heap_mb" -> (peakHeapMb, "MB"))
     }
     val detail = Map(
       "workload" -> o.workload, "seed" -> o.seed, "trace" -> o.trace,
       "rounds" -> stats.rounds, "measured_s" -> measuredS,
-      "setup_passes_s" -> setupS, "gc_s" -> gcS,
+      "setup_s" -> setupParts, "gc_s" -> gcS,
       "checks" -> stats.checks.map { case (n, c) => n -> Map("pass" -> c.pass, "fail" -> c.fail) }.toMap,
-      "check_errors" -> stats.errors.toSeq,
+      "warm_up_checks" -> warm.checks.map { case (n, c) => n -> Map("pass" -> c.pass, "fail" -> c.fail) }.toMap,
+      "check_errors" -> (warm.errors ++ stats.errors).toSeq,
       "known_faults" -> wl.knownFaults.toSeq,
       "selftest" -> selfTest.toMap,
       "metrics" -> wl.detail(stats).map { case (k, (v, u)) => k -> Map("value" -> v, "unit" -> u) })
@@ -179,10 +174,12 @@ final class Stats {
     }
   }
 
-  /** Time one operation (wall ms) into sample series `name`. */
+  /** Time one operation into sample series `name` (wall ms) and
+    * `<name>_cpu` (CPU ms of the Java threads, executors included). */
   def time[T](name: String)(body: => T): T = {
-    val t0 = System.nanoTime()
+    val (t0, c0) = (System.nanoTime(), Cpu.javaThreadsNs())
     val r = body
+    record(s"${name}_cpu", Cpu.javaThreadsMsSince(c0))
     record(name, (System.nanoTime() - t0) / 1e6)
     synchronized { attempted += 1 }
     r
@@ -199,6 +196,31 @@ final class Stats {
   def series(name: String): Seq[Double] = synchronized {
     samples.getOrElse(name, mutable.ArrayBuffer.empty).toSeq
   }
+}
+
+/** CPU time of this JVM. The kernel leaves the time the hypervisor
+  * steals from the VM out of it, which wall time cannot. */
+object Cpu {
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  private val threads = ManagementFactory.getThreadMXBean
+    .asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** Every thread, JIT compilers and GC included, in clock ticks (5-10 ms
+    * here): for set-up, which lasts tens of seconds. */
+  def processMs(): Double = os.getProcessCpuTime / 1e6
+
+  /** CPU ns of every live Java thread (driver, executors, clients; not the
+    * JIT compiler and GC threads, which the JVM hides), by thread id. */
+  def javaThreadsNs(): Map[Long, Long] = {
+    val ids = threads.getAllThreadIds
+    ids.iterator.zip(threads.getThreadCpuTime(ids).iterator).filter(_._2 >= 0).toMap
+  }
+
+  /** CPU ms the Java threads spent since `before`, to the nanosecond. A
+    * thread that ended in between is left out. */
+  def javaThreadsMsSince(before: Map[Long, Long]): Double =
+    javaThreadsNs().iterator.map { case (id, ns) => ns - before.getOrElse(id, 0L) }.sum / 1e6
 }
 
 /** Peak heap occupancy after garbage collection, from the collectors'

@@ -27,8 +27,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * A [[SparkListener]] sums task metrics per span, a
   * [[QueryExecutionListener]] records each query's planning phases and
   * its executed plan's operator metrics, and a [[StreamingQueryListener]]
-  * keeps the micro-batch progress reports. Only the measured phase is
-  * recorded; events are drained from the listener bus before reading.
+  * keeps the micro-batch progress reports. Only the measured phase and
+  * set-up work run under [[recording]] are recorded; events are drained
+  * from the listener bus before reading.
   */
 final class Tracer {
 
@@ -129,6 +130,14 @@ final class Tracer {
   def startMeasure(spark: SparkSession): Unit = {
     BenchBus.drain(spark.sparkContext)
     measuring = true
+  }
+
+  /** Record the spans `body` opens (set-up work) as the measured phase's
+    * are recorded. */
+  def recording[T](spark: SparkSession)(body: => T): T = {
+    startMeasure(spark)
+    try body
+    finally { BenchBus.drain(spark.sparkContext); measuring = false }
   }
 
   /** Drain the bus and attribute each recorded query to its span. */

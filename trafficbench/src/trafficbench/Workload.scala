@@ -12,14 +12,15 @@ trait Workload {
     * the checks need. Not part of `setup_s`. */
   def prepare(): Unit
 
-  /** Everything a user pays before the first operation: session-scoped
-    * state, fitted models, built files. Runs on a fresh session. */
+  /** Everything a user pays before the first operation besides the
+    * session and the warm-up: fitted models, built files. Part of `setup_s`. */
   def setup(spark: SparkSession, tracer: Option[Tracer]): Unit
 
   /** One whole round of operations, each timed and checked. */
   def round(spark: SparkSession, stats: Stats, tracer: Option[Tracer]): Unit
 
-  /** Untimed rounds before the measurement: one by default. */
+  /** Rounds before the measurement, a fixed amount of work: one round by
+    * default. Part of `setup_s`; their checks count towards `correct`. */
   def warmUp(spark: SparkSession, stats: Stats, tracer: Option[Tracer]): Unit =
     round(spark, stats, tracer)
 
@@ -28,6 +29,10 @@ trait Workload {
     val end = System.nanoTime() + seconds * 1000000000L
     do { round(spark, stats, tracer); stats.rounds += 1 } while (System.nanoTime() < end)
   }
+
+  /** Checks of what set-up built, made after the measurement so that
+    * neither `setup_s` nor the rounds pay for them. */
+  def finalChecks(spark: SparkSession, stats: Stats): Unit = ()
 
   def teardown(): Unit = ()
 
@@ -39,10 +44,6 @@ trait Workload {
 
   /** The workload's own named figures, printed on the detail line. */
   def detail(stats: Stats): Seq[Metric]
-
-  /** Metric-name prefixes of layers that only this workload calls; a
-    * traced run prints them besides [[Layers.Shared]]. */
-  def ownLayers: Seq[String] = Nil
 
   /** Per-layer values the workload counts itself (traced runs). */
   def tracedCounts(stats: Stats): Map[String, Double] = Map.empty
